@@ -19,6 +19,9 @@ package graft.table
   *    metadata (schema / partitioning / properties).
   *  - [[ProtocolChangedException]]        — the winner upgraded the
   *    protocol.
+  *  - [[ConcurrentTransactionException]]  — the winner committed for an
+  *    idempotent-writer id (`Txn` appId) this transaction also commits
+  *    for; the writer re-probes its ledger instead of double-writing.
   *
   * A lost race whose winners trigger NONE of these classifications is not
   * a logical conflict at all: the transaction rebases onto the new head and
@@ -42,19 +45,30 @@ final class MetadataChangedException(msg: String)
 final class ProtocolChangedException(msg: String)
     extends GraftConcurrentWriteException(msg)
 
-/** What a transaction READ and intends to REMOVE — the inputs to conflict
-  * classification after a lost commit race.
+final class ConcurrentTransactionException(msg: String)
+    extends GraftConcurrentWriteException(msg)
+
+/** What a transaction READ — the input to conflict classification after a
+  * lost commit race. What it REMOVES is not stated here: the transaction
+  * reads it off the attempt's staged removes.
   *
   *  - `readWholeTable`: the txn's result depends on every row (a MERGE
-  *    with no source-key pruning, an INSERT OVERWRITE, a RESTORE) — any
-  *    concurrent append invalidates it.
+  *    with no source-key pruning, an INSERT OVERWRITE, a RESTORE, a DDL
+  *    that validated or reinterprets every live row) — any concurrent
+  *    append invalidates it.
   *  - `readPredicate`: file-level predicate scoping the read (a DELETE's
   *    WHERE, a pruned MERGE's source-key range). Appends whose stats may
   *    match it conflict; provably-disjoint appends do not.
   *  - `readFiles`: paths whose CONTENT the txn read (pruned candidates,
   *    rewrite inputs). A winner removing one invalidates what we read.
-  *  - `removes`: paths this txn's commit removes. Two writers removing the
-  *    same file are two conflicting row-level operations.
+  *
+  * Every GraftTable commit goes through ONE transaction
+  * (`GraftTable.transact`): gate the writer features, publish, and on a
+  * lost race classify each winner against this read set and the staged
+  * removes — rebase when disjoint, throw the typed conflict otherwise —
+  * for at most 10 attempts, then throw [[GraftConcurrentWriteException]].
+  * DDL commits read the whole table, so a concurrent data commit fails
+  * them typed instead of slipping rows past their validation.
   *
   * OPTIMIZE-style reorganizations pass `readWholeTable = false` and no
   * predicate: they reorganize exactly `readFiles`, so appends never
@@ -63,5 +77,17 @@ final class ProtocolChangedException(msg: String)
 private[table] final case class TxnInfo(
     readWholeTable: Boolean,
     readPredicate: Option[org.apache.spark.sql.Column],
-    readFiles: Set[String],
-    removes: Set[String])
+    readFiles: Set[String])
+
+private[table] object TxnInfo {
+  /** A blind write reads nothing: only a metadata or protocol change, or a
+    * commit for the same idempotent-writer id, conflicts with it. */
+  val blind: TxnInfo = TxnInfo(readWholeTable = false, None, Set.empty)
+}
+
+/** One attempt's commit, staged for the version it lands at: its
+  * operation-specific metrics, the live files it removes (the transaction
+  * writes their RemoveFiles with the attempt's timestamp, ahead of every
+  * other staged action) and the actions that follow them. */
+private[table] final case class Staged(metrics: Map[String, String],
+    removes: Seq[AddFile], actions: Seq[Action])

@@ -466,7 +466,12 @@ final class GraftLog(val tablePath: String,
       case a => a
     }
 
-  def commit(v: Long, actions0: Seq[Action]): Unit = {
+  /** Publish `actions0` as version `v`, or throw a
+    * ConcurrentModificationException when another writer got there first.
+    * Table writes go through `GraftTable.transact`, which adds the
+    * writer-feature gate, the CommitInfo and the bounded, classified
+    * retry; package-private so code outside graft cannot bypass it. */
+  private[graft] def commit(v: Long, actions0: Seq[Action]): Unit = {
     // Foreign Delta logs are READ-ONLY: appending graft-format actions
     // would leave a mixed history that neither delta-spark nor this
     // reader could replay coherently. Refuse with the migration path.

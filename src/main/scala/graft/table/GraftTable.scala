@@ -661,18 +661,15 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val bad = read(s).filter(!coalesce(expr(checkExpr), lit(false))).limit(1).count()
     require(bad == 0, s"cannot add constraint '$name': existing rows violate $checkExpr")
     val meta = s.metaData.copy(constraints = s.metaData.constraints + (name -> checkExpr))
-    log.commit(s.version + 1, Seq(meta,
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ADD CONSTRAINT",
-        Map("name" -> name, "expr" -> checkExpr))))
+    commitDdl(s, "ADD CONSTRAINT", Map("name" -> name, "expr" -> checkExpr))(
+      (_, _) => Seq(meta))
   }
 
   def dropConstraint(name: String): Unit = {
     val s = snapshot
     require(s.metaData.constraints.contains(name), s"no such constraint: $name")
     val meta = s.metaData.copy(constraints = s.metaData.constraints - name)
-    log.commit(s.version + 1, Seq(meta,
-      CommitInfo(s.version + 1, log.nextTimestamp(), "DROP CONSTRAINT",
-        Map("name" -> name))))
+    commitDdl(s, "DROP CONSTRAINT", Map("name" -> name))((_, _) => Seq(meta))
   }
 
   /** Append rows as a new commit. Blind appends never conflict
@@ -715,12 +712,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // rows were conformed to a schema that no longer governs). An identity
     // frontier bump is itself a metadata change, so two identity appends
     // can never both rebase from one frontier (one gets MetadataChanged).
-    commitDml(s0raw,
-      TxnInfo(readWholeTable = false, None, Set.empty, Set.empty),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "WRITE",
-          Map("numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        metaAction ++ adds)
+    transact(s0raw.version, s0raw, "WRITE", dataChange = true, Some(TxnInfo.blind))(
+      (_, _) => Staged(Map.empty, Nil, metaAction ++ adds))
     autoCompact()
   }
 
@@ -737,20 +730,16 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val adds = stampRowIds(s0, writeDataMapped(
       enforceConstraints(conform(assignIdentity(df, s0), s0.schema), s0.metaData),
       s0.metaData))
-    val info = TxnInfo(readWholeTable = false, None, Set.empty, Set.empty)
-    val committed = commitDmlAt(s0.version, s0, info,
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "WRITE",
-          Map("numOutputRows" -> adds.map(_.numRecords).sum.toString,
-              "txnAppId" -> appId, "epoch" -> version.toString)),
-        Txn(appId, version)) ++ identityMeta(s0, adds) ++ adds,
-      // a concurrent replay of the SAME app may have landed this epoch
-      // while we raced — skip instead of double-writing
-      onRaceRecheck = head =>
-        log.snapshotAt(head).transactions.get(appId).exists(_ >= version))
-    if (!committed)
+    try transact(s0.version, s0, "WRITE", dataChange = true, Some(TxnInfo.blind))(
+      (_, _) => Staged(Map("txnAppId" -> appId, "epoch" -> version.toString), Nil,
+        Txn(appId, version) +: (identityMeta(s0, adds) ++ adds)))
+    catch { case _: ConcurrentTransactionException =>
+      // the SAME app committed while we raced — re-probe its ledger (a
+      // replay of this epoch is skipped) instead of double-writing
       adds.foreach(a => Files.deleteIfExists(Paths.get(path, a.path)))
-    committed
+      return appendIdempotent(df, appId, version)
+    }
+    true
   }
 
   /** COPY INTO (Delta/Databricks parity): idempotently ingest data files
@@ -804,23 +793,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       enforceConstraints(conform(assignIdentity(df, s0), s0.schema), s0.metaData),
       s0.metaData))
     val txns = pending.map(p => Txn(txnKey(p), Files.getLastModifiedTime(p).toMillis))
-    val info = TxnInfo(readWholeTable = false, None, Set.empty, Set.empty)
-    val committed = commitDmlAt(s0.version, s0, info,
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "COPY INTO",
-          Map("numSourceFiles" -> pending.size.toString,
-              "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        identityMeta(s0, adds) ++ txns ++ adds,
-      // a CONCURRENT copyInto may have won the race with some (or all) of
-      // our source files — blindly rebasing would ingest them twice. Abort
-      // when any pending file is now covered by the folded ledger; the
-      // recursive retry re-lists and ingests only what is still missing.
-      onRaceRecheck = head => {
-        val ledger = log.snapshotAt(head).transactions
-        pending.exists(p => ledger.get(txnKey(p))
-          .exists(_ >= Files.getLastModifiedTime(p).toMillis))
-      })
-    if (!committed) {
+    try transact(s0.version, s0, "COPY INTO", dataChange = true, Some(TxnInfo.blind))(
+      (_, _) => Staged(Map("numSourceFiles" -> pending.size.toString), Nil,
+        identityMeta(s0, adds) ++ txns ++ adds))
+    catch { case _: ConcurrentTransactionException =>
+      // a CONCURRENT copyInto ingested some of our source files — blindly
+      // rebasing would ingest them twice; the retry re-lists and ingests
+      // only what is still missing
       adds.foreach(a => Files.deleteIfExists(Paths.get(path, a.path)))
       return copyInto(sourceDir, fmt)
     }
@@ -842,14 +821,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // overwrite logically replaces EVERYTHING as of its snapshot — a
     // concurrent append would be silently erased by a rebase, so it
     // conflicts (readWholeTable)
-    commitDml(s,
-      TxnInfo(readWholeTable = true, None,
-        s.files.map(_.path).toSet, s.files.map(_.path).toSet),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "OVERWRITE",
-          Map("numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        identityMeta(s, adds) ++
-        s.files.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+    transact(s.version, s, "OVERWRITE", dataChange = true,
+      Some(TxnInfo(readWholeTable = true, None, s.files.map(_.path).toSet)))(
+      (_, _) => Staged(Map.empty, s.files, identityMeta(s, adds) ++ adds ++ cdc))
     autoCompact()
   }
 
@@ -973,16 +947,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         .drop(GraftTable.RowIdCol)
         .withColumn("_change_type", lit("delete"))
         .unionByName(conformed.withColumn("_change_type", lit("insert"))))
-    commitDml(s,
-      TxnInfo(readWholeTable = false, Some(pred),
-        candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "OVERWRITE",
-          Map("predicate" -> pred.toString,
-              "numRewrittenFiles" -> touched.size.toString,
-              "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        identityMeta(s, adds) ++
-        touched.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+    transact(s.version, s, "OVERWRITE", dataChange = true,
+      Some(TxnInfo(readWholeTable = false, Some(pred), candidates.map(_.path).toSet)))(
+      (_, _) => Staged(
+        Map("predicate" -> pred.toString, "numRewrittenFiles" -> touched.size.toString),
+        touched, identityMeta(s, adds) ++ adds ++ cdc))
     autoCompact()
   }
 
@@ -1032,16 +1001,12 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         if (v == default) col(c).isNull else col(c) === lit(v)
       }.reduce(_ && _))
       .reduceOption(_ || _).getOrElse(lit(false))
-    commitDml(s,
-      TxnInfo(readWholeTable = false, Some(comboPred),
-        touched.map(_.path).toSet, touched.map(_.path).toSet),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "OVERWRITE",
-          Map("partitions" -> combos.size.toString,
-              "numRewrittenFiles" -> touched.size.toString,
-              "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        identityMeta(s, adds) ++
-        touched.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+    transact(s.version, s, "OVERWRITE", dataChange = true,
+      Some(TxnInfo(readWholeTable = false, Some(comboPred), touched.map(_.path).toSet)))(
+      (_, _) => Staged(
+        Map("partitions" -> combos.size.toString,
+            "numRewrittenFiles" -> touched.size.toString),
+        touched, identityMeta(s, adds) ++ adds ++ cdc))
     autoCompact()
   }
 
@@ -1144,21 +1109,20 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           key == "clustering.columns")
         Seq(s.protocol)
       else Nil
-    val ts = log.nextTimestamp()
     // ICT enabled post-creation pins the delta enablement markers the
     // spec requires (version + timestamp of the first ICT commit) so a
     // delta 4.x reader knows where the authoritative clock starts
-    val metaIct =
-      if (key == "delta.enableInCommitTimestamps" &&
-          value.equalsIgnoreCase("true") &&
-          !metaFinal.properties.contains("delta.inCommitTimestampEnablementVersion"))
-        metaFinal.copy(properties = metaFinal.properties ++ Map(
-          "delta.inCommitTimestampEnablementVersion" -> (s.version + 1).toString,
+    val ictEnabling = key == "delta.enableInCommitTimestamps" &&
+      value.equalsIgnoreCase("true") &&
+      !metaFinal.properties.contains("delta.inCommitTimestampEnablementVersion")
+    commitDdl(s, "SET TBLPROPERTIES", Map(key -> value)) { (v, ts) =>
+      val metaIct =
+        if (!ictEnabling) metaFinal
+        else metaFinal.copy(properties = metaFinal.properties ++ Map(
+          "delta.inCommitTimestampEnablementVersion" -> v.toString,
           "delta.inCommitTimestampEnablementTimestamp" -> ts.toString))
-      else metaFinal
-    log.commit(s.version + 1, upgrade ++ compatEnable ++ Seq(metaIct,
-      CommitInfo(s.version + 1, ts, "SET TBLPROPERTIES",
-        Map(key -> value))) ++ backfill)
+      upgrade ++ compatEnable ++ Seq(metaIct) ++ backfill
+    }
   }
 
   /** Delta-style auto compaction: when the table property
@@ -1182,14 +1146,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // Column, so classify conservatively: the whole table was readable by
     // the rewrite plan (appends conflict), and the replaced files are both
     // read and removed
-    commitDml(s,
-      TxnInfo(readWholeTable = true, None,
-        removed.map(_.path).toSet, removed.map(_.path).toSet),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, op,
-          Map("numRewrittenFiles" -> removed.size.toString,
-              "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-        removed.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+    transact(s.version, s, op, dataChange = true,
+      Some(TxnInfo(readWholeTable = true, None, removed.map(_.path).toSet)))(
+      (_, _) => Staged(Map("numRewrittenFiles" -> removed.size.toString),
+        removed, adds ++ cdc))
   }
 
   /** Atomic REPLACE TABLE (AS SELECT) commit: ONE log version carries the
@@ -1199,38 +1159,33 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * empty or mixed middle; the staged files were written into the table
     * directory ahead of time and stay invisible until this lands. History
     * and time travel across the replace boundary are preserved (the log
-    * keeps every prior commit). A concurrent winner is superseded: REPLACE
-    * semantically reads-and-rewrites the whole table, so the loop
-    * recomputes the head's live set and retries — bounded by contention,
-    * never re-running the (already written) query. */
+    * keeps every prior commit). A concurrent winner is superseded: each
+    * attempt removes the live set of the head it lands on — at most 10
+    * attempts, like every commit, never re-running the (already written)
+    * query. */
   private[graft] def commitReplaceTable(adds: Seq[AddFile],
       newSchema: StructType, partitionCols: Seq[String],
       props: Map[String, String]): Unit = {
-    gateWriterFeatures(snapshot.protocol)
+    val s0 = snapshot
     // REPLACE drops every committed row — the exact thing appendOnly
     // forbids; unset the property first (the same escape hatch as DML)
-    requireNotAppendOnly(snapshot.metaData, "REPLACE TABLE AS SELECT")
-    var done = false
-    while (!done) {
-      val s = snapshot
-      val v = s.version + 1
-      val ts = log.nextTimestamp()
-      // constraint.* props land in metaData.constraints (enforced on
-      // every later write), not as dead same-named properties — same
-      // split the non-staged CREATE path performs via addConstraint
-      val (chk, plain) = props.partition(_._1.startsWith("constraint."))
-      val meta = MetaData(UUID.randomUUID().toString, newSchema.json,
-        System.currentTimeMillis(), partitionCols,
-        chk.map { case (k, v2) => k.stripPrefix("constraint.") -> v2 }, plain)
-      try {
-        log.commit(v, Seq(meta,
-          CommitInfo(v, ts, "REPLACE TABLE AS SELECT",
-            Map("numRemovedFiles" -> s.files.size.toString,
-                "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-          s.files.map(f => RemoveFile(f.path, ts)) ++
-          FileOps.capAddStats(meta, adds))
-        done = true
-      } catch { case _: java.util.ConcurrentModificationException => () }
+    requireNotAppendOnly(s0.metaData, "REPLACE TABLE AS SELECT")
+    // constraint.* props land in metaData.constraints (enforced on
+    // every later write), not as dead same-named properties — same
+    // split the non-staged CREATE path performs via addConstraint
+    val (chk, plain) = props.partition(_._1.startsWith("constraint."))
+    val meta = MetaData(UUID.randomUUID().toString, newSchema.json,
+      System.currentTimeMillis(), partitionCols,
+      chk.map { case (k, v) => k.stripPrefix("constraint.") -> v }, plain)
+    val capped = FileOps.capAddStats(meta, adds)
+    // no read set: the replace supersedes whatever a winner wrote, so each
+    // attempt removes the live files of the head it lands on
+    transact(s0.version, s0, "REPLACE TABLE AS SELECT", dataChange = true, None) {
+      (v, _) =>
+        val head = log.snapshotAt(v - 1)
+        gateWriterFeatures(head.protocol)
+        Staged(Map("numRemovedFiles" -> head.files.size.toString), head.files,
+          meta +: capped)
     }
   }
 
@@ -1331,10 +1286,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
             (GraftTable.ExistenceDefaultsProp ->
               (prior.map(_ + ",").getOrElse("") + name)))
       }
-    log.commit(s.version + 1, Seq(markedMeta,
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ADD COLUMNS",
-        Map("column" -> s"$name ${dataType.simpleString}") ++
-          default.map("default" -> _))))
+    commitDdl(s, "ADD COLUMNS",
+      Map("column" -> s"$name ${dataType.simpleString}") ++ default.map("default" -> _))(
+      (_, _) => Seq(markedMeta))
   }
 
   /** ALTER TABLE ... ALTER COLUMN ... SET / DROP NOT NULL. DROP NOT NULL
@@ -1365,11 +1319,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       }
     }
     val evolved = StructType(s.schema.fields.updated(idx, f.copy(nullable = nullable)))
-    log.commit(s.version + 1, Seq(
-      s.metaData.copy(schemaString = evolved.json),
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ALTER COLUMN",
-        Map("column" -> name,
-            "nullability" -> (if (nullable) "DROP NOT NULL" else "SET NOT NULL")))))
+    commitDdl(s, "ALTER COLUMN", Map("column" -> name,
+        "nullability" -> (if (nullable) "DROP NOT NULL" else "SET NOT NULL")))(
+      (_, _) => Seq(s.metaData.copy(schemaString = evolved.json)))
   }
 
   /** ALTER COLUMN ... SET / DROP DEFAULT — metadata-only. Spark's
@@ -1400,11 +1352,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     val proto: Seq[Action] =
       if (sql.isDefined && DeltaWriteCompat.enabled(s.metaData))
         Seq(s.protocol) else Nil
-    log.commit(s.version + 1, proto ++ Seq(
-      s.metaData.copy(schemaString = evolved.json),
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ALTER COLUMN",
-        Map("column" -> name,
-            "default" -> sql.getOrElse("DROP DEFAULT")))))
+    commitDdl(s, "ALTER COLUMN",
+      Map("column" -> name, "default" -> sql.getOrElse("DROP DEFAULT")))(
+      (_, _) => proto :+ s.metaData.copy(schemaString = evolved.json))
   }
 
   /** ALTER COLUMN ... COMMENT — column documentation as a versioned
@@ -1421,10 +1371,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       case None    => mb.remove("comment")
     }
     val evolved = StructType(s.schema.fields.updated(idx, f.copy(metadata = mb.build())))
-    log.commit(s.version + 1, Seq(
-      s.metaData.copy(schemaString = evolved.json),
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ALTER COLUMN",
-        Map("column" -> name, "comment" -> comment.getOrElse("")))))
+    commitDdl(s, "ALTER COLUMN", Map("column" -> name, "comment" -> comment.getOrElse("")))(
+      (_, _) => Seq(s.metaData.copy(schemaString = evolved.json)))
   }
 
   /** ALTER TABLE ... ALTER COLUMN ... TYPE — type WIDENING as a
@@ -1482,11 +1430,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // rather than refusal
     val proto: Seq[Action] =
       if (DeltaWriteCompat.enabled(s.metaData)) Seq(s.protocol) else Nil
-    log.commit(s.version + 1, proto ++ Seq(
-      s.metaData.copy(schemaString = evolved.json),
-      CommitInfo(s.version + 1, log.nextTimestamp(), "ALTER COLUMN",
-        Map("column" -> name,
-            "type" -> s"${f.dataType.simpleString} -> ${newType.simpleString}"))))
+    commitDdl(s, "ALTER COLUMN", Map("column" -> name,
+        "type" -> s"${f.dataType.simpleString} -> ${newType.simpleString}"))(
+      (_, _) => proto :+ s.metaData.copy(schemaString = evolved.json))
   }
 
   private def columnMappingEnabled(meta: MetaData): Boolean =
@@ -1543,10 +1489,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       .find { case (_, e) => generationRefs(e).exists(_.equalsIgnoreCase(oldName)) }
     require(genHit.isEmpty,
       s"cannot rename $oldName: referenced by generated column ${genHit.get._1}'s expression")
-    log.commit(s.version + 1, Seq(
-      s.metaData.copy(schemaString = evolved.json, partitionColumns = parts),
-      CommitInfo(s.version + 1, log.nextTimestamp(), "RENAME COLUMN",
-        Map("from" -> oldName, "to" -> newName))))
+    commitDdl(s, "RENAME COLUMN", Map("from" -> oldName, "to" -> newName))(
+      (_, _) => Seq(s.metaData.copy(schemaString = evolved.json, partitionColumns = parts)))
   }
 
   /** ALTER TABLE DROP COLUMN: metadata-only under column mapping — the
@@ -1584,9 +1528,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       if (!bloomHit) meta0
       else meta0.copy(properties = meta0.properties + ("bloom.columns" ->
         GraftTable.bloomColumns(meta0).filterNot(_ == name).mkString(",")))
-    log.commit(s.version + 1, Seq(meta,
-      CommitInfo(s.version + 1, log.nextTimestamp(), "DROP COLUMNS",
-        Map("column" -> name))))
+    commitDdl(s, "DROP COLUMNS", Map("column" -> name))((_, _) => Seq(meta))
   }
 
   /** One micro-batch epoch of a streaming write, committed atomically
@@ -1594,15 +1536,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * GraftStreamingWrite checks before re-committing an epoch. */
   private[graft] def commitStreamingAppend(adds: Seq[AddFile],
       queryId: String, epochId: Long): Unit = {
-    commitDmlAt(latestVersion, snapshot,
-      TxnInfo(readWholeTable = false, None, Set.empty, Set.empty),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "STREAMING UPDATE",
-          Map("numOutputRows" -> adds.map(_.numRecords).sum.toString,
-              "txnAppId" -> queryId, "epoch" -> epochId.toString)),
+    // the sink folded this head for its exactly-once probe moments ago —
+    // a cache hit, no log fold
+    val s = snapshot
+    transact(s.version, s, "STREAMING UPDATE", dataChange = true, Some(TxnInfo.blind))(
+      (_, _) => Staged(Map("txnAppId" -> queryId, "epoch" -> epochId.toString), Nil,
         // SetTransaction: folds into the snapshot so the exactly-once
         // replay guard is an O(1) lookup, not an O(history) log scan
-        Txn(queryId, epochId)) ++ adds)
+        Txn(queryId, epochId) +: adds))
     autoCompact()
   }
 
@@ -1616,9 +1557,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       s"$key is the table's physical bucket layout and cannot be unset — " +
         "re-layout with optimize(rebucketTo = (column, n))")
     val meta = s.metaData.copy(properties = s.metaData.properties - key)
-    log.commit(s.version + 1, Seq(meta,
-      CommitInfo(s.version + 1, log.nextTimestamp(), "UNSET TBLPROPERTIES",
-        Map("key" -> key))))
+    commitDdl(s, "UNSET TBLPROPERTIES", Map("key" -> key))((_, _) => Seq(meta))
   }
 
   /** Delta's `ALTER TABLE ... DROP FEATURE` (the delta-4.x
@@ -1641,7 +1580,6 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * feature. */
   def dropFeature(feature: String): Unit = {
     val s = snapshot
-    val dropVersion = s.version + 1
     def active(f: String): Boolean =
       s.protocol.readerFeatures.contains(f) || s.protocol.writerFeatures.contains(f)
     val disabledProp: String = feature match {
@@ -1666,18 +1604,18 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           "is either not droppable (its traces live in data files) or not a " +
           "graft feature")
     }
-    val meta = s.metaData.copy(properties =
-      s.metaData.properties - disabledProp +
-        ("delta.requireCheckpointProtectionBeforeVersion" -> dropVersion.toString))
     val proto = s.protocol.copy(
       readerFeatures = s.protocol.readerFeatures.filterNot(_ == feature),
       writerFeatures =
         (s.protocol.writerFeatures.filterNot(_ == feature) :+
           "checkpointProtection").distinct,
       minWriterVersion = math.max(s.protocol.minWriterVersion, 7))
-    log.commit(dropVersion, Seq(proto, meta,
-      CommitInfo(dropVersion, log.nextTimestamp(), "DROP FEATURE",
-        Map("feature" -> feature))))
+    // the protected boundary is the version the drop actually lands at
+    val dropVersion = commitDdl(s, "DROP FEATURE", Map("feature" -> feature)) {
+      (v, _) => Seq(proto, s.metaData.copy(properties =
+        s.metaData.properties - disabledProp +
+          ("delta.requireCheckpointProtectionBeforeVersion" -> v.toString)))
+    }
     // the protected boundary checkpoint: readers seed at the drop version
     log.writeCheckpoint(dropVersion)
   }
@@ -1883,18 +1821,11 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // restore resets the WHOLE table to the target snapshot — a rebase
     // past any concurrent change would silently erase it, so everything
     // conflicts (readWholeTable + full remove set)
-    commitDml(cur,
-      TxnInfo(readWholeTable = true, None,
-        cur.files.map(_.path).toSet, removedFiles.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "RESTORE",
-          Map("restoredVersion" -> version.toString))) ++
+    transact(cur.version, cur, "RESTORE", dataChange = true,
+      Some(TxnInfo(readWholeTable = true, None, cur.files.map(_.path).toSet)))(
+      (_, _) => Staged(Map("restoredVersion" -> version.toString), removedFiles,
         (if (tgt.metaData != cur.metaData) Seq(tgt.metaData) else Nil) ++
-        cur.files.filterNot(f => tgtPaths.contains(f.path)).map(f => RemoveFile(f.path, ts)) ++
-        dvChanged.map(f => RemoveFile(f.path, ts)) ++
-        dvChanged.map(Actions.untagReAdd) ++
-        tgt.files.filterNot(f => curByPath.contains(f.path))
-          .map(Actions.untagReAdd) ++ cdc)
+          addedFiles.map(Actions.untagReAdd) ++ cdc))
   }
 
   /** CLONE: branch this table's current snapshot into a new table at
@@ -1921,8 +1852,8 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // experiment against last week's table without restoring the source
     val s = asOfVersion.map(snapshotAt).getOrElse(snapshot)
     Files.createDirectories(Paths.get(dest))
-    val destLog = new GraftLog(dest, LogStore.resolve(spark))
-    require(!destLog.exists, s"$dest is already a GraftTable")
+    val clone = new GraftTable(spark, dest)
+    require(!clone.log.exists, s"$dest is already a GraftTable")
     // the reorganization flag is COMMIT-scoped ("this commit served no new
     // rows"), not durable file state: the clone's commit 0 IS its initial
     // data, so a tag inherited from a foreign OPTIMIZE/checkpoint add must
@@ -1958,11 +1889,12 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // the source's protocol rides along: a clone of a DV/column-mapped
     // table must gate old readers exactly like its source (and a compat
     // clone's version 0 must carry the protocol line delta requires)
-    destLog.commit(0L, Seq(meta, s.protocol,
-      CommitInfo(0L, destLog.nextTimestamp(), "CLONE",
+    clone.transact(-1L, clone.snapshot, "CLONE", dataChange = true, Some(TxnInfo.blind))(
+      (_, _) => Staged(
         Map("sourceTable" -> path, "sourceVersion" -> s.version.toString,
-            "shallow" -> shallow.toString))) ++ adds)
-    new GraftTable(spark, dest)
+            "shallow" -> shallow.toString),
+        Nil, Seq(meta, s.protocol) ++ adds))
+    clone
   }
 
   /** FSCK REPAIR TABLE: drop log entries whose physical data file (or
@@ -1995,13 +1927,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         }.collect().toSeq.sorted
     if (missing.isEmpty || dryRun) return missing
     val gone = missing.toSet
-    commitDml(s,
-      TxnInfo(readWholeTable = false, readPredicate = None,
-        readFiles = gone, removes = gone),
-      (v, ts) => Seq(
-        CommitInfo(v, ts, "FSCK",
-          Map("numRemovedFiles" -> missing.size.toString))) ++
-        missing.map(RemoveFile(_, ts)))
+    transact(s.version, s, "FSCK", dataChange = true,
+      Some(TxnInfo(readWholeTable = false, None, gone)))(
+      (_, _) => Staged(Map("numRemovedFiles" -> missing.size.toString),
+        s.files.filter(f => gone(f.path)), Nil))
     missing
   }
 
@@ -2359,35 +2288,32 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // pure reorganization of exactly `scoped`: concurrent appends never
     // conflict (Delta's dataChange=false leniency) — only a writer that
     // removed one of our input files does
-    commitDml(s,
-      TxnInfo(readWholeTable = false, None,
-        scoped.map(_.path).toSet, scoped.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "OPTIMIZE",
-          // the skip metrics PARTITION the untouched file set (summing
-          // never double-counts): numFilesSkipped = out of `where` scope,
-          // numClusteredFilesSkipped = conforming clustered files,
-          // numSizeSkipped = right-sized survivors of a bare bin-pack —
-          // so s.files.size == before + the skips, auditable per commit
-          Map("numFilesBefore" -> scoped.size.toString,
-              "numFilesAfter" -> adds.size.toString,
-              "numFilesSkipped" -> (s.files.size - inScope.size).toString) ++
-            (if (incremental)
-               Map("numClusteredFilesSkipped" -> clusteredSkipped.toString)
-             else Map.empty) ++
-            (if (scoped0.size != scoped.size)
-               Map("numSizeSkipped" -> (scoped0.size - scoped.size).toString)
-             else Map.empty) ++
-            (if (zCols.nonEmpty) Map("zorderBy" -> zCols.mkString(","))
-             else Map.empty))) ++
-        identityMeta(s, adds) ++
-        // reorganization, not new data: removes carry dataChange=false and
-        // the outputs the reorg tag — the PROTOCOL-level spelling (what
-        // compat emits for delta streams and the tail reader skips on),
-        // alongside the operation-name recognition graft always had
-        scoped.map(f => RemoveFile(f.path, ts, dataChange = false)) ++
-        adds.map(a => a.copy(tags =
-          a.tags + (Actions.DataChangeFalseTag -> "true"))))
+    // reorganization, not new data: removes carry dataChange=false and
+    // the outputs the reorg tag — the PROTOCOL-level spelling (what
+    // compat emits for delta streams and the tail reader skips on),
+    // alongside the operation-name recognition graft always had
+    transact(s.version, s, "OPTIMIZE", dataChange = false,
+      Some(TxnInfo(readWholeTable = false, None, scoped.map(_.path).toSet)))(
+      (_, _) => Staged(
+        // the skip metrics PARTITION the untouched file set (summing
+        // never double-counts): numFilesSkipped = out of `where` scope,
+        // numClusteredFilesSkipped = conforming clustered files,
+        // numSizeSkipped = right-sized survivors of a bare bin-pack —
+        // so s.files.size == before + the skips, auditable per commit
+        Map("numFilesBefore" -> scoped.size.toString,
+            "numFilesAfter" -> adds.size.toString,
+            "numFilesSkipped" -> (s.files.size - inScope.size).toString) ++
+          (if (incremental)
+             Map("numClusteredFilesSkipped" -> clusteredSkipped.toString)
+           else Map.empty) ++
+          (if (scoped0.size != scoped.size)
+             Map("numSizeSkipped" -> (scoped0.size - scoped.size).toString)
+           else Map.empty) ++
+          (if (zCols.nonEmpty) Map("zorderBy" -> zCols.mkString(","))
+           else Map.empty),
+        scoped,
+        identityMeta(s, adds) ++ adds.map(a => a.copy(tags =
+          a.tags + (Actions.DataChangeFalseTag -> "true")))))
   }
 
   /** The `optimize(rebucketTo = ...)` rewrite: every live file reads back
@@ -2426,18 +2352,15 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // append unbucketed files (the gate must not wait for a checkpoint)
     val protocolLine: Seq[Action] =
       if (DeltaWriteCompat.enabled(newMeta)) Seq(s.protocol) else Nil
-    commitDml(s,
-      TxnInfo(readWholeTable = true, None,
-        s.files.map(_.path).toSet, s.files.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "OPTIMIZE",
-          Map("rebucketTo" -> s"bucket($n, $column)",
-              "numFilesBefore" -> s.files.size.toString,
-              "numFilesAfter" -> adds.size.toString)),
-          newMeta) ++ protocolLine ++
-        s.files.map(f => RemoveFile(f.path, ts, dataChange = false)) ++
-        adds.map(a => a.copy(tags =
-          a.tags + (Actions.DataChangeFalseTag -> "true"))))
+    transact(s.version, s, "OPTIMIZE", dataChange = false,
+      Some(TxnInfo(readWholeTable = true, None, s.files.map(_.path).toSet)))(
+      (_, _) => Staged(
+        Map("rebucketTo" -> s"bucket($n, $column)",
+            "numFilesBefore" -> s.files.size.toString,
+            "numFilesAfter" -> adds.size.toString),
+        s.files,
+        (newMeta +: protocolLine) ++ adds.map(a => a.copy(tags =
+          a.tags + (Actions.DataChangeFalseTag -> "true")))))
   }
 
   /** DELETE rows matching `pred` (api.py:107). Files with no match survive
@@ -2536,37 +2459,93 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     }
   }
 
-  /** Commit with Delta-style logical conflict resolution (VLDB 2020 §3.2):
-    * losing the physical commit race is NOT an error by itself. The loser
-    * reads every winning commit in (its snapshot, new head], classifies it
-    * against what this transaction read and removes, and either
+  /** THE commit path. Every GraftTable commit — DML, maintenance,
+    * streaming epochs, REPLACE, DDL and the version-0 writes (`base` = -1)
+    * — lands through here, with Delta-style logical conflict resolution
+    * (VLDB 2020 §3.2).
     *
-    *  - REBASES: no logical overlap (the winner appended files disjoint
-    *    from our read predicate, or touched files we neither read nor
-    *    remove) — re-commit the SAME actions at the new head; the rewrite
-    *    stays valid because nothing it depended on changed; or
-    *  - THROWS a typed [[GraftConcurrentWriteException]] subclass naming
-    *    exactly what conflicted.
+    * The writer-feature gate runs on the base protocol. Each attempt then
+    * stages `stage(version, timestamp)` for the version it tries to land,
+    * stamps the commit's one CommitInfo, writes the staged removes as
+    * RemoveFiles with the attempt's timestamp (ahead of every AddFile: the
+    * fold applies actions in order, and a deletion-vector re-add reuses the
+    * path it removes), and publishes put-if-absent. A `dataChange` commit's
+    * CommitInfo carries `numOutputRows`: the rows of the staged AddFiles
+    * whose path it does not also remove (a remove-and-re-add only moves a
+    * deletion vector). A reorganization or DDL (`dataChange = false`)
+    * carries none, and its removes say `dataChange = false`.
     *
-    * `mkActions(version, timestamp)` rebuilds the action list for the
-    * attempted version (CommitInfo / RemoveFile embed both). The data
-    * files were already written and stay invisible until a commit lands,
-    * so rebasing costs one log read per winning commit — no data work. */
-  private[table] def commitDml(s: Snapshot, info: TxnInfo,
-      mkActions: (Long, Long) => Seq[Action]): Unit = {
-    gateWriterFeatures(s.protocol)
-    commitDmlAt(s.version, s, info, mkActions)
+    * Losing the race is not an error by itself: every winner in (base,
+    * new head] is classified against `read` and the attempt's staged
+    * removes, and the transaction either REBASES — nothing it depended on
+    * changed, so it re-stages at the new head; the data files were written
+    * once and stay invisible until a commit lands — or throws the typed
+    * [[GraftConcurrentWriteException]] subclass naming the conflict. A
+    * winner that changes the protocol always conflicts, so a rebase never
+    * outruns the gate. `read = None` marks a commit that supersedes
+    * whatever the winners wrote (REPLACE TABLE): it is not classified and
+    * re-stages from the new head. After 10 lost races the transaction gives
+    * up with a GraftConcurrentWriteException — the commit path never waits
+    * without a bound.
+    *
+    * `snap` (the snapshot at `base`) is by-name: the version-0 writes have
+    * none until a winner creates the table, and only the gate and a lost
+    * race's predicate classification force it. Returns the landed version. */
+  private[table] def transact(base: Long, snap: => Snapshot, op: String,
+      dataChange: Boolean, read: Option[TxnInfo])(
+      stage: (Long, Long) => Staged): Long = {
+    lazy val s = snap
+    if (base >= 0) gateWriterFeatures(s.protocol)
+    @annotation.tailrec def attempt(head: Long, n: Int): Long = {
+      val v = head + 1
+      val ts = log.nextTimestamp()
+      val staged = stage(v, ts)
+      val removed = staged.removes.map(_.path).toSet
+      val rows = staged.actions.collect {
+        case a: AddFile if !removed.contains(a.path) => a.numRecords
+      }.sum
+      val metrics =
+        if (dataChange) staged.metrics + ("numOutputRows" -> rows.toString)
+        else staged.metrics
+      val landed =
+        try {
+          log.commit(v, CommitInfo(v, ts, op, metrics) +:
+            (staged.removes.map(f => RemoveFile(f.path, ts, dataChange)) ++
+              staged.actions))
+          true
+        } catch { case _: java.util.ConcurrentModificationException => false }
+      if (landed) v
+      else {
+        val newHead = latestVersion
+        read.foreach(r => (v to newHead).foreach(w => classifyWinner(s, w, r, staged)))
+        if (n == 10) throw new GraftConcurrentWriteException(
+          s"$op on table $path (based on version $base) lost $n consecutive " +
+            "commit races; giving up")
+        attempt(newHead, n + 1)
+      }
+    }
+    attempt(base, 1)
   }
+
+  /** A DDL commit: metadata (and protocol) only. It READ the whole table —
+    * its validation (ADD CONSTRAINT, SET NOT NULL) or reinterpretation
+    * (schema, properties) covers every live row — so any concurrent data
+    * commit fails it with a typed conflict instead of slipping rows past. */
+  private[table] def commitDdl(s: Snapshot, op: String, metrics: Map[String, String])(
+      stage: (Long, Long) => Seq[Action]): Long =
+    transact(s.version, s, op, dataChange = false,
+      Some(TxnInfo(readWholeTable = true, None, s.files.map(_.path).toSet)))(
+      (v, ts) => Staged(metrics, Nil, stage(v, ts)))
+
+  /** Streaming-sink entry: gate once at writer-factory creation (the
+    * per-epoch commit gates again in the transaction). */
+  private[graft] def gateWrite(): Unit = gateWriterFeatures(snapshot.protocol)
 
   /** Writer-feature gate (the write-side twin of GraftLog's reader gate): a
     * table whose protocol lists a writerFeature this build does not
     * implement must not be written — e.g. a generated-columns table written
     * by a writer that ignores the generation rule would silently break the
     * column invariant for every later reader. */
-  /** Streaming-sink entry: gate once at writer-factory creation (the
-    * per-epoch commit path deliberately avoids a snapshot fold). */
-  private[graft] def gateWrite(): Unit = gateWriterFeatures(snapshot.protocol)
-
   private def gateWriterFeatures(protocol: Protocol): Unit = {
     val unsupported = protocol.writerFeatures.filterNot(Protocol.supportedWriterFeatures)
     if (unsupported.nonEmpty) throw new GraftProtocolException(
@@ -2575,45 +2554,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         s"${Protocol.supportedWriterFeatures.toSeq.sorted.mkString(", ")})")
   }
 
-  /** As commitDml, but the snapshot (needed only to resolve the read
-    * predicate against winner files when a race is actually LOST) is
-    * by-name — the streaming epoch hot path passes `snapshot` without
-    * paying a log fold on the common no-race commit.
-    *
-    * `onRaceRecheck` runs after each lost race's winners classify as
-    * disjoint, with the new head version: returning true ABORTS the commit
-    * (returns false to the caller, who cleans up its staged files) — the
-    * hook idempotent writers (appendIdempotent, copyInto) use to re-probe
-    * their ledgers instead of blindly rebasing into a double-write.
-    * Returns true when the commit landed. */
-  private[table] def commitDmlAt(baseVersion: Long, snap: => Snapshot, info: TxnInfo,
-      mkActions: (Long, Long) => Seq[Action],
-      onRaceRecheck: Long => Boolean = _ => false): Boolean = {
-    lazy val s = snap
-    var base = baseVersion
-    var attempts = 0
-    while (true) {
-      try {
-        log.commit(base + 1, mkActions(base + 1, log.nextTimestamp()))
-        return true
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempts += 1
-          val head = latestVersion
-          ((base + 1) to head).foreach(w => classifyWinner(s, w, info))
-          if (onRaceRecheck(head)) return false
-          // all winners disjoint — rebase and retry (bounded: a writer
-          // that loses 10 straight races is livelocked, surface it)
-          if (attempts >= 10) throw e
-          base = head
-      }
-    }
-    true
-  }
-
-  /** One winning commit vs this transaction: throw the first applicable
-    * typed conflict, or return (disjoint — safe to rebase past). */
-  private[table] def classifyWinner(s: Snapshot, w: Long, info: TxnInfo): Unit = {
+  /** One winning commit vs this transaction's attempt: throw the first
+    * applicable typed conflict, or return (disjoint — safe to rebase past). */
+  private def classifyWinner(s: => Snapshot, w: Long, info: TxnInfo,
+      staged: Staged): Unit = {
     val actions = log.readVersion(w)
     val op = actions.collectFirst { case c: CommitInfo => c.operation }.getOrElse("?")
     if (actions.exists(_.isInstanceOf[Protocol]))
@@ -2622,8 +2566,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     if (actions.exists(_.isInstanceOf[MetaData]))
       throw new MetadataChangedException(
         s"commit $w of $path ($op) changed table metadata during this transaction")
+    val ours = staged.actions.collect { case t: Txn => t.appId }.toSet
+    val sameApp = actions.collect { case t: Txn if ours(t.appId) => t.appId }
+    if (sameApp.nonEmpty)
+      throw new ConcurrentTransactionException(
+        s"commit $w of $path ($op) committed for ${sameApp.head}, which this " +
+          "transaction also commits for")
     val wRemoves = actions.collect { case r: RemoveFile => r.path }.toSet
-    val dd = wRemoves.intersect(info.removes)
+    val dd = wRemoves.intersect(staged.removes.map(_.path).toSet)
     if (dd.nonEmpty)
       throw new ConcurrentDeleteDeleteException(
         s"commit $w of $path ($op) removed ${dd.size} file(s) this transaction " +
@@ -2876,7 +2826,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * copy-on-write (the same trade Delta makes). */
   private def deleteWithDv(s: Snapshot, pred: Column): Option[Long] = {
     val candidates = prunedFiles(s, pred)
-    if (candidates.isEmpty) { commitNoop(s, "DELETE"); return Some(0L) }
+    if (candidates.isEmpty) return Some(noMatch(s, "DELETE"))
     // positions of matching rows, with existing DVs already applied (a
     // re-delete of a tombstoned row must not double-count)
     val newPos = readFilesMeta(s, candidates)
@@ -2884,7 +2834,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       .select(col("__fname"), col("__pos"))
     val perFileNew = newPos.groupBy("__fname").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (perFileNew.isEmpty) { commitNoop(s, "DELETE"); return Some(0L) }
+    if (perFileNew.isEmpty) return Some(noMatch(s, "DELETE"))
     val touched = s.files.filter(f => perFileNew.contains(canonPath(f.path)))
     val maxTombstones = s.metaData.properties
       .get("deletionVectors.maxTombstones").map(_.toLong).getOrElse(4L * 1000 * 1000)
@@ -2904,15 +2854,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       .filter(coalesce(pred, lit(false))).drop("__fname", "__pos")
       .drop(GraftTable.RowIdCol)
       .withColumn("_change_type", lit("delete")))
-    commitDml(s,
-      TxnInfo(readWholeTable = false, Some(pred),
-        candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "DELETE",
-          Map("numDeletedRows" -> deleted.toString,
-              "numRewrittenFiles" -> "0",
-              "numDeletionVectors" -> touched.size.toString))) ++
-        touched.map(f => RemoveFile(f.path, ts)) ++ reAdds ++ cdc)
+    transact(s.version, s, "DELETE", dataChange = true,
+      Some(TxnInfo(readWholeTable = false, Some(pred), candidates.map(_.path).toSet)))(
+      (_, _) => Staged(
+        Map("numDeletedRows" -> deleted.toString,
+            "numRewrittenFiles" -> "0",
+            "numDeletionVectors" -> touched.size.toString),
+        touched, reAdds ++ cdc))
     Some(deleted)
   }
 
@@ -3005,13 +2953,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       case None    => () // tombstone cap exceeded — fall through to CoW
     }
     val candidates = prunedFiles(s, pred)
-    if (candidates.isEmpty) { commitNoop(s, "DELETE"); return 0L }
+    if (candidates.isEmpty) return noMatch(s, "DELETE")
     // provenance via _metadata (not input_file_name): stays defined when a
     // file's deletion vector turns the read into a multi-source plan
     val touchedNames = readFilesMeta(s, candidates).filter(pred)
       .select(col("__fname")).distinct().collect()
       .map(_.getString(0)).toSet
-    if (touchedNames.isEmpty) { commitNoop(s, "DELETE"); return 0L }
+    if (touchedNames.isEmpty) return noMatch(s, "DELETE")
 
     // path-level matching (normalized absolute spelling) — safe even for
     // converted/foreign layouts whose basenames collide across dirs
@@ -3039,15 +2987,12 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       .filter(coalesce(pred, lit(false))).drop("__fname", "__pos")
       .drop(GraftTable.RowIdCol)
       .withColumn("_change_type", lit("delete")))
-    commitDml(s,
-      TxnInfo(readWholeTable = false, Some(pred),
-        candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "DELETE",
-          Map("numDeletedRows" -> deleted.toString,
-              "numRewrittenFiles" -> touched.size.toString))) ++
-        identityMeta(s, adds) ++
-        touched.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+    transact(s.version, s, "DELETE", dataChange = true,
+      Some(TxnInfo(readWholeTable = false, Some(pred), candidates.map(_.path).toSet)))(
+      (_, _) => Staged(
+        Map("numDeletedRows" -> deleted.toString,
+            "numRewrittenFiles" -> touched.size.toString),
+        touched, identityMeta(s, adds) ++ adds ++ cdc))
     deleted
   }
 
@@ -3081,7 +3026,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         s"UPDATE cannot set identity column '$k' — it is GENERATED ALWAYS " +
           "and assigned by the engine"))
     val candidates = prunedFiles(s, pred)
-    if (candidates.isEmpty) { commitNoop(s, "UPDATE"); return 0L }
+    if (candidates.isEmpty) return noMatch(s, "UPDATE")
     val matched = readFilesMeta(s, candidates).filter(coalesce(pred, lit(false)))
     // with row tracking, post-images CARRY the updated row's id (rewritten
     // or appended files materialize it — an UPDATE changes values, never
@@ -3103,7 +3048,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
       val affected = matched.localCheckpoint(true)
       val perFile = affected.groupBy("__fname").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (perFile.isEmpty) { commitNoop(s, "UPDATE"); return 0L }
+      if (perFile.isEmpty) return noMatch(s, "UPDATE")
       val touched = s.files.filter(f => perFile.contains(canonPath(f.path)))
       val maxTombstones = s.metaData.properties
         .get("deletionVectors.maxTombstones").map(_.toLong).getOrElse(4L * 1000 * 1000)
@@ -3121,16 +3066,13 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
           dvCount = f.dvCount + perFile(canonPath(f.path))))
         val updated = perFile.values.sum
         val cdcFiles = cdc
-        commitDml(s,
-          TxnInfo(readWholeTable = false, Some(pred),
-            candidates.map(_.path).toSet, touched.map(_.path).toSet),
-          (v, ts) =>
-            Seq(CommitInfo(v, ts, "UPDATE",
-              Map("numUpdatedRows" -> updated.toString,
-                  "numRewrittenFiles" -> "0",
-                  "numDeletionVectors" -> touched.size.toString))) ++
-            identityMeta(s, adds) ++
-            touched.map(f => RemoveFile(f.path, ts)) ++ reAdds ++ adds ++ cdcFiles)
+        transact(s.version, s, "UPDATE", dataChange = true,
+          Some(TxnInfo(readWholeTable = false, Some(pred), candidates.map(_.path).toSet)))(
+          (_, _) => Staged(
+            Map("numUpdatedRows" -> updated.toString,
+                "numRewrittenFiles" -> "0",
+                "numDeletionVectors" -> touched.size.toString),
+            touched, identityMeta(s, adds) ++ reAdds ++ adds ++ cdcFiles))
         return updated
       }
       // cap exceeded — fall through to copy-on-write
@@ -3139,7 +3081,7 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     // one pass yields the touched-file set AND the matched-row count — no
     // second scan for the numUpdatedRows metric
     val perFileTouched = matched.groupBy(col("__fname")).count().collect()
-    if (perFileTouched.isEmpty) { commitNoop(s, "UPDATE"); return 0L }
+    if (perFileTouched.isEmpty) return noMatch(s, "UPDATE")
     val touchedNames = perFileTouched.map(_.getString(0)).toSet
     val touched = s.files.filter(f => touchedNames.contains(canonPath(f.path)))
     // one projection rewrites the touched files: matching rows take their
@@ -3162,15 +3104,12 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         s.metaData), s.metaData)
     val updated = perFileTouched.map(_.getLong(1)).sum
     val cdcFiles = cdc
-    commitDml(s,
-      TxnInfo(readWholeTable = false, Some(pred),
-        candidates.map(_.path).toSet, touched.map(_.path).toSet),
-      (v, ts) =>
-        Seq(CommitInfo(v, ts, "UPDATE",
-          Map("numUpdatedRows" -> updated.toString,
-              "numRewrittenFiles" -> touched.size.toString))) ++
-        identityMeta(s, adds) ++
-        touched.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdcFiles)
+    transact(s.version, s, "UPDATE", dataChange = true,
+      Some(TxnInfo(readWholeTable = false, Some(pred), candidates.map(_.path).toSet)))(
+      (_, _) => Staged(
+        Map("numUpdatedRows" -> updated.toString,
+            "numRewrittenFiles" -> touched.size.toString),
+        touched, identityMeta(s, adds) ++ adds ++ cdcFiles))
     updated
   }
 
@@ -3178,15 +3117,14 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
   def update(predicate: String, set: Map[String, String]): Long =
     update(expr(predicate), set)
 
-  /** Record a DML that matched nothing as a commit (history parity with
-    * Delta's zero-row operations). Reads nothing, removes nothing — routed
-    * through the resolver so a lost race against a concurrent writer
-    * rebases trivially instead of surfacing a raw
-    * ConcurrentModificationException. */
-  private def commitNoop(s: Snapshot, op: String): Unit =
-    commitDml(s, TxnInfo(readWholeTable = false, None, Set.empty, Set.empty),
-      (v, ts) => Seq(CommitInfo(v, ts, op,
-        Map("numDeletedRows" -> "0", "numRewrittenFiles" -> "0"))))
+  /** A DML that matched nothing still commits (history parity with
+    * Delta's zero-row operations). It reads and removes nothing, so a lost
+    * race rebases trivially. Returns the rows it affected: none. */
+  private def noMatch(s: Snapshot, op: String): Long = {
+    transact(s.version, s, op, dataChange = true, Some(TxnInfo.blind))(
+      (_, _) => Staged(Map("numDeletedRows" -> "0", "numRewrittenFiles" -> "0"), Nil, Nil))
+    0L
+  }
 
   private def fileName(uri: String): String = uri.substring(uri.lastIndexOf('/') + 1)
 
@@ -3506,14 +3444,12 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
             dvPath = Some(dvPathOf(canonPath(f.path))),
             dvCount = f.dvCount + perFile.getOrElse(canonPath(f.path), 0L)))
           val cdc = writeCdcFiles(s, mergeCdc(affected, inserts))
-          commitDml(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, touched),
-            (v, ts) =>
-              Seq(CommitInfo(v, ts, "MERGE",
-                Map("numTargetFilesRewritten" -> "0",
-                    "numDeletionVectors" -> touched.size.toString,
-                    "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-              metaActions(adds) ++
-              touched.map(f => RemoveFile(f.path, ts)) ++ reAdds ++ adds ++ cdc)
+          transact(s.version, s, "MERGE", dataChange = true,
+            Some(mergeTxnInfo(srcKeyPrune, prunedTargetFiles)))(
+            (_, _) => Staged(
+              Map("numTargetFilesRewritten" -> "0",
+                  "numDeletionVectors" -> touched.size.toString),
+              touched, metaActions(adds) ++ reAdds ++ adds ++ cdc))
           true
         }
       }
@@ -3528,13 +3464,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         val adds = stampRowIds(s, writeDataMapped(out, s.metaData))
         val cdc = writeCdcFiles(s,
           mergeCdc(withAction.filter(col("__action") >= 0), inserts))
-        commitDml(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, touched),
-          (v, ts) =>
-            Seq(CommitInfo(v, ts, "MERGE",
-              Map("numTargetFilesRewritten" -> touched.size.toString,
-                  "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-            metaActions(adds) ++
-            touched.map(f => RemoveFile(f.path, ts)) ++ adds ++ cdc)
+        transact(s.version, s, "MERGE", dataChange = true,
+          Some(mergeTxnInfo(srcKeyPrune, prunedTargetFiles)))(
+          (_, _) => Staged(Map("numTargetFilesRewritten" -> touched.size.toString),
+            touched, metaActions(adds) ++ adds ++ cdc))
       }
     } else {
       // No affected target rows: pure insert path.
@@ -3543,12 +3476,10 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
         schema, s.metaData.properties)
       val adds = stampRowIds(s, writeDataMapped(
         enforceConstraints(conform(inserts, schema), s.metaData), s.metaData))
-      commitDml(s, mergeTxnInfo(srcKeyPrune, prunedTargetFiles, Nil),
-        (v, ts) =>
-          Seq(CommitInfo(v, ts, "MERGE",
-            Map("numTargetFilesRewritten" -> "0",
-                "numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-          metaActions(adds) ++ adds)
+      transact(s.version, s, "MERGE", dataChange = true,
+        Some(mergeTxnInfo(srcKeyPrune, prunedTargetFiles)))(
+        (_, _) => Staged(Map("numTargetFilesRewritten" -> "0"), Nil,
+          metaActions(adds) ++ adds))
     }
   }
 
@@ -3559,9 +3490,9 @@ final class GraftTable private (val spark: SparkSession, val path: String) {
     * Without a prune predicate the merge read the whole table (match
     * discovery + the insert anti-join), so any append conflicts. */
   private def mergeTxnInfo(srcKeyPrune: Option[Column],
-      prunedTargetFiles: Seq[AddFile], touched: Seq[AddFile]): TxnInfo =
+      prunedTargetFiles: Seq[AddFile]): TxnInfo =
     TxnInfo(readWholeTable = srcKeyPrune.isEmpty, srcKeyPrune,
-      prunedTargetFiles.map(_.path).toSet, touched.map(_.path).toSet)
+      prunedTargetFiles.map(_.path).toSet)
 
   /** Range predicate over TARGET columns from the source's actual key
     * bounds: for every `t.col = s.col` equi-conjunct of the merge
@@ -4052,8 +3983,8 @@ object GraftTable {
              identity: Map[String, (Long, Long)] = Map.empty,
              bucketBy: Option[(String, Int)] = None): GraftTable = {
     Files.createDirectories(Paths.get(path))
-    val log = new GraftLog(path, LogStore.resolve(spark))
-    require(!log.exists, s"$path is already a GraftTable")
+    val t = new GraftTable(spark, path)
+    require(!t.log.exists, s"$path is already a GraftTable")
     // generated columns (GENERATED ALWAYS AS): computed over the seed frame
     // here and by conform() on every later write; the expression is pinned
     // into the field's schema metadata so it travels with schemaString
@@ -4132,10 +4063,9 @@ object GraftTable {
     val meta = IdentityColumns.bumpedProps(props, schema, addsRaw)
       .map(p => meta0.copy(properties = p)).getOrElse(meta0)
     val adds = FileOps.capAddStats(meta, addsRaw)
-    log.commit(0L, protocolAction ++ Seq(meta,
-      CommitInfo(0L, log.nextTimestamp(), "CREATE",
-        Map("numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++ adds)
-    new GraftTable(spark, path)
+    t.transact(-1L, t.snapshot, "CREATE", dataChange = true, Some(TxnInfo.blind))(
+      (_, _) => Staged(Map.empty, Nil, protocolAction ++ (meta +: adds)))
+    t
   }
 
   /** Commit 0 for a STAGED create (CTAS through the catalog's staging
@@ -4146,18 +4076,17 @@ object GraftTable {
   private[graft] def createStaged(spark: SparkSession, path: String,
       schema: StructType, partitionCols: Seq[String],
       props: Map[String, String], adds: Seq[AddFile]): GraftTable = {
-    val log = new GraftLog(path, LogStore.resolve(spark))
-    require(!log.exists, s"$path is already a GraftTable")
+    val t = new GraftTable(spark, path)
+    require(!t.log.exists, s"$path is already a GraftTable")
     // constraint.* props → metaData.constraints (see commitReplaceTable)
     val (chk, plain) = props.partition(_._1.startsWith("constraint."))
     val meta = MetaData(UUID.randomUUID().toString, schema.json,
       System.currentTimeMillis(), partitionCols,
       chk.map { case (k, v) => k.stripPrefix("constraint.") -> v }, plain)
-    log.commit(0L, Seq(meta,
-      CommitInfo(0L, log.nextTimestamp(), "CREATE TABLE AS SELECT",
-        Map("numOutputRows" -> adds.map(_.numRecords).sum.toString))) ++
-      FileOps.capAddStats(meta, adds))
-    new GraftTable(spark, path)
+    t.transact(-1L, t.snapshot, "CREATE TABLE AS SELECT", dataChange = true,
+      Some(TxnInfo.blind))(
+      (_, _) => Staged(Map.empty, Nil, meta +: FileOps.capAddStats(meta, adds)))
+    t
   }
 
   /** Create-if-absent with seed rows (spark_project.py:17-38). */
@@ -4523,8 +4452,8 @@ object GraftTable {
     * the directory is a full GraftTable — DML, time travel (from v0),
     * streaming all apply. */
   def convert(spark: SparkSession, path: String): GraftTable = {
-    val log = new GraftLog(path, LogStore.resolve(spark))
-    require(!log.exists, s"$path is already a GraftTable")
+    val t = new GraftTable(spark, path)
+    require(!t.log.exists, s"$path is already a GraftTable")
     val root = Paths.get(path)
     require(Files.isDirectory(root), s"$path is not a directory")
     val files = Files.walk(root).iterator().asScala
@@ -4574,10 +4503,11 @@ object GraftTable {
     val meta = MetaData(UUID.randomUUID().toString, schema.json,
       System.currentTimeMillis(), partitionBy, Map.empty, Map.empty)
     val adds = FileOps.capAddStats(meta, adds0)
-    log.commit(0L, Seq(meta,
-      CommitInfo(0L, log.nextTimestamp(), "CONVERT",
+    t.transact(-1L, t.snapshot, "CONVERT", dataChange = true, Some(TxnInfo.blind))(
+      (_, _) => Staged(
         Map("numFiles" -> adds.size.toString,
-            "numRows" -> adds.map(_.numRecords).sum.toString))) ++ adds)
-    new GraftTable(spark, path)
+            "numRows" -> adds.map(_.numRecords).sum.toString),
+        Nil, meta +: adds))
+    t
   }
 }

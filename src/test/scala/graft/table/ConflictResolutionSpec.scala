@@ -4,16 +4,20 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 import org.apache.spark.sql.{DataFrame, Row}
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.SpanSugar._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multi-writer LOGICAL conflict resolution (Delta VLDB 2020 §3.2): a lost
   * commit race rebases when the winner is provably disjoint from what this
   * transaction read/removed, and raises a TYPED conflict otherwise. The
-  * deterministic tests drive `commitDml` directly with a deliberately
+  * deterministic tests drive `transact` directly with a deliberately
   * stale snapshot (the winner committed in between); the racing tests pin
   * the end-to-end behavior under real thread interleavings. */
-class ConflictResolutionSpec extends SparkTestBase {
+class ConflictResolutionSpec extends SparkTestBase with TimeLimits {
+
+  implicit val signaler: Signaler = ThreadSignaler
 
   private val schema = StructType(Seq(
     StructField("id", IntegerType, nullable = false),
@@ -34,16 +38,19 @@ class ConflictResolutionSpec extends SparkTestBase {
     (t, a, b)
   }
 
-  private def noopActions(op: String)(v: Long, ts: Long): Seq[Action] =
-    Seq(CommitInfo(v, ts, op, Map.empty))
+  /** Commit `op` through the transaction on the (possibly stale) snapshot
+    * `s` with read set `read`, removing `removes` (paths of live files). */
+  private def commitOn(t: GraftTable, s: Snapshot, op: String, read: TxnInfo,
+      removes: String*): Long =
+    t.transact(s.version, s, op, dataChange = true, Some(read))(
+      (_, _) => Staged(Map.empty, s.files.filter(f => removes.contains(f.path)), Nil))
 
   test("lost race vs a stats-disjoint append rebases and lands") {
     val (t, a, _) = twoFiles()
     val stale = t.snapshot
     t.append(df((200, "w")))                    // winner: ids disjoint from pred
-    t.commitDml(stale,
-      TxnInfo(readWholeTable = false, Some(col("id") <= 4), Set(a), Set(a)),
-      (v, ts) => Seq(CommitInfo(v, ts, "DELETE", Map.empty), RemoveFile(a, ts)))
+    commitOn(t, stale, "DELETE",
+      TxnInfo(readWholeTable = false, Some(col("id") <= 4), Set(a)), a)
     assert(t.latestVersion === stale.version + 2, "rebase commits at the new head")
     assert(!t.snapshot.files.map(_.path).contains(a))
     assert(t.toDF.filter(col("id") === 200).count() === 1, "winner's append intact")
@@ -54,9 +61,8 @@ class ConflictResolutionSpec extends SparkTestBase {
     val stale = t.snapshot
     t.append(df((2, "dup")))                    // overlaps pred range [0,4]
     intercept[ConcurrentAppendException] {
-      t.commitDml(stale,
-        TxnInfo(readWholeTable = false, Some(col("id") <= 4), Set(a), Set(a)),
-        (v, ts) => Seq(CommitInfo(v, ts, "DELETE", Map.empty), RemoveFile(a, ts)))
+      commitOn(t, stale, "DELETE",
+        TxnInfo(readWholeTable = false, Some(col("id") <= 4), Set(a)), a)
     }
   }
 
@@ -65,9 +71,8 @@ class ConflictResolutionSpec extends SparkTestBase {
     val stale = t.snapshot
     t.delete(col("id") === 1)                   // winner rewrites file A
     intercept[ConcurrentDeleteDeleteException] {
-      t.commitDml(stale,
-        TxnInfo(readWholeTable = false, Some(col("id") === 3), Set(a), Set(a)),
-        (v, ts) => Seq(CommitInfo(v, ts, "DELETE", Map.empty), RemoveFile(a, ts)))
+      commitOn(t, stale, "DELETE",
+        TxnInfo(readWholeTable = false, Some(col("id") === 3), Set(a)), a)
     }
   }
 
@@ -77,9 +82,7 @@ class ConflictResolutionSpec extends SparkTestBase {
     t.delete(col("id") === 1)                   // winner rewrites file A
     intercept[ConcurrentDeleteReadException] {
       // this txn read A and B but only removes B
-      t.commitDml(stale,
-        TxnInfo(readWholeTable = false, None, Set(a, b), Set(b)),
-        (v, ts) => Seq(CommitInfo(v, ts, "DELETE", Map.empty), RemoveFile(b, ts)))
+      commitOn(t, stale, "DELETE", TxnInfo(readWholeTable = false, None, Set(a, b)), b)
     }
   }
 
@@ -88,16 +91,12 @@ class ConflictResolutionSpec extends SparkTestBase {
     val stale = t.snapshot
     t.setProperty("some.prop", "x")             // metaData-changing commit
     intercept[MetadataChangedException] {
-      t.commitDml(stale,
-        TxnInfo(readWholeTable = false, None, Set(a), Set(a)),
-        noopActions("DELETE"))
+      commitOn(t, stale, "DELETE", TxnInfo(readWholeTable = false, None, Set(a)), a)
     }
     val stale2 = t.snapshot
     t.setProperty("deletionVectors.enabled", "true") // protocol upgrade commit
     intercept[ProtocolChangedException] {
-      t.commitDml(stale2,
-        TxnInfo(readWholeTable = false, None, Set.empty, Set.empty),
-        noopActions("DELETE"))
+      commitOn(t, stale2, "DELETE", TxnInfo.blind)
     }
   }
 
@@ -106,9 +105,7 @@ class ConflictResolutionSpec extends SparkTestBase {
     val stale = t.snapshot
     t.append(df((300, "w")))
     intercept[ConcurrentAppendException] {
-      t.commitDml(stale,
-        TxnInfo(readWholeTable = true, None, Set.empty, Set.empty),
-        noopActions("MERGE"))
+      commitOn(t, stale, "MERGE", TxnInfo(readWholeTable = true, None, Set.empty))
     }
   }
 
@@ -116,11 +113,55 @@ class ConflictResolutionSpec extends SparkTestBase {
     val (t, a, _) = twoFiles()
     val stale = t.snapshot
     (0 until 3).foreach(i => t.append(df((400 + i, "w"))))
-    t.commitDml(stale,
-      TxnInfo(readWholeTable = false, Some(col("id") <= 4), Set(a), Set(a)),
-      (v, ts) => Seq(CommitInfo(v, ts, "DELETE", Map.empty), RemoveFile(a, ts)))
+    commitOn(t, stale, "DELETE",
+      TxnInfo(readWholeTable = false, Some(col("id") <= 4), Set(a)), a)
     assert(t.latestVersion === stale.version + 4)
     assert(t.toDF.filter(col("id") >= 400).count() === 3)
+  }
+
+  test("DDL is writer-feature gated: ADD COLUMNS refuses an unknown writer feature") {
+    val (t, _, _) = twoFiles()
+    val p = t.snapshot.protocol
+    t.log.commit(t.latestVersion + 1, Seq(
+      p.copy(minWriterVersion = 7, writerFeatures = p.writerFeatures :+ "fromTheFuture"),
+      CommitInfo(t.latestVersion + 1, t.log.nextTimestamp(), "UPGRADE", Map.empty)))
+    val head = t.latestVersion
+    intercept[GraftProtocolException](t.addColumn("extra", StringType))
+    assert(t.latestVersion === head, "a gated DDL must not commit")
+  }
+
+  test("DDL on a stale snapshot vs a winning append -> ConcurrentAppendException") {
+    val (t, _, _) = twoFiles()
+    val stale = t.snapshot
+    t.append(df((-1, "neg")))                   // winner: a row the check rejects
+    intercept[ConcurrentAppendException] {
+      t.commitDdl(stale, "ADD CONSTRAINT", Map("name" -> "pos", "expr" -> "id >= 0"))(
+        (_, _) => Seq(stale.metaData.copy(
+          constraints = stale.metaData.constraints + ("pos" -> "id >= 0"))))
+    }
+    assert(t.latestVersion === stale.version + 1, "only the winner's commit landed")
+    assert(t.history().filter(col("version") === stale.version + 1)
+      .select("operation").head().getString(0) === "WRITE")
+    assert(t.snapshot.metaData.constraints.isEmpty)
+  }
+
+  test("a writer that loses every race gives up typed after 10 attempts") {
+    val dir = tmpDir("cr-lose-")
+    val t0 = GraftTable.create(spark, dir, df((0 to 4).map(i => (i, s"d$i")): _*))
+    val head = t0.latestVersion
+    spark.conf.set(LogStore.ConfKey, classOf[LosingStore].getName)
+    val t = try GraftTable.forPath(spark, dir) finally spark.conf.unset(LogStore.ConfKey)
+    def bounded(what: String)(write: => Unit): Unit = {
+      val e = failAfter(120.seconds)(intercept[GraftConcurrentWriteException](write))
+      assert(e.getMessage.contains(dir) && e.getMessage.contains(s"version $head") &&
+        e.getMessage.contains("10"), s"$what: message must name table, base, attempts")
+      assert(t0.latestVersion === head, s"$what must not land")
+    }
+    bounded("append")(t.append(df((9, "x"))))
+    bounded("delete")(t.delete(col("id") === 1))
+    bounded("merge")(t.merge(df((1, "m")), "t.id = s.id")
+      .whenMatchedUpdate(Map("v" -> "s.v")).execute())
+    bounded("replace")(t.commitReplaceTable(Nil, t.snapshot.schema, Nil, Map.empty))
   }
 
   test("end-to-end race: appends vs predicate-disjoint DELETE — both land, no errors") {
@@ -252,4 +293,11 @@ class ConflictResolutionSpec extends SparkTestBase {
     assert(t.toDF.select("rid").distinct().count() == n,
       s"identity ids collided under contention (${retries.get()} retries)")
   }
+}
+
+/** A store on which every publish loses the race: some other writer always
+  * holds the version first. */
+class LosingStore extends DelegatingStore {
+  override def publishIfAbsent(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
+    throw new java.nio.file.FileAlreadyExistsException(dst.toString)
 }

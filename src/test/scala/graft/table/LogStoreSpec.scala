@@ -4,6 +4,22 @@ import java.nio.file.{Files, Path}
 
 import graft.SparkTestBase
 
+/** Delegates everything to the POSIX store; subclasses break one clause. */
+class DelegatingStore extends LogStore {
+  override def readLines(p: Path): Seq[String] = PosixLogStore.readLines(p)
+  override def readString(p: Path): String = PosixLogStore.readString(p)
+  override def writeTmp(p: Path, bytes: Array[Byte]): Unit = PosixLogStore.writeTmp(p, bytes)
+  override def publishIfAbsent(src: Path, dst: Path): Unit = PosixLogStore.publishIfAbsent(src, dst)
+  override def publishOverwrite(src: Path, dst: Path): Unit = PosixLogStore.publishOverwrite(src, dst)
+  override def exists(p: Path): Boolean = PosixLogStore.exists(p)
+  override def isRegularFile(p: Path): Boolean = PosixLogStore.isRegularFile(p)
+  override def isDirectory(p: Path): Boolean = PosixLogStore.isDirectory(p)
+  override def list(dir: Path, glob: String): Seq[Path] = PosixLogStore.list(dir, glob)
+  override def deleteIfExists(p: Path): Boolean = PosixLogStore.deleteIfExists(p)
+  override def mtimeMs(p: Path): Long = PosixLogStore.mtimeMs(p)
+  override def createDirectories(p: Path): Unit = PosixLogStore.createDirectories(p)
+}
+
 /** The LogStore seam: the commit protocol's storage contract is
   * (1) publishIfAbsent = atomic putIfAbsent, (2) read-after-publish
   * visibility. These tests swap in stores that VIOLATE each clause and
@@ -21,22 +37,6 @@ class LogStoreSpec extends SparkTestBase {
       MetaData(java.util.UUID.randomUUID().toString, schema.json,
         System.currentTimeMillis(), Nil, Map.empty, Map.empty),
       CommitInfo(0L, log.nextTimestamp(), "CREATE", Map.empty))
-  }
-
-  /** Delegates everything to the POSIX store; subclasses break one clause. */
-  private class DelegatingStore extends LogStore {
-    override def readLines(p: Path): Seq[String] = PosixLogStore.readLines(p)
-    override def readString(p: Path): String = PosixLogStore.readString(p)
-    override def writeTmp(p: Path, bytes: Array[Byte]): Unit = PosixLogStore.writeTmp(p, bytes)
-    override def publishIfAbsent(src: Path, dst: Path): Unit = PosixLogStore.publishIfAbsent(src, dst)
-    override def publishOverwrite(src: Path, dst: Path): Unit = PosixLogStore.publishOverwrite(src, dst)
-    override def exists(p: Path): Boolean = PosixLogStore.exists(p)
-    override def isRegularFile(p: Path): Boolean = PosixLogStore.isRegularFile(p)
-    override def isDirectory(p: Path): Boolean = PosixLogStore.isDirectory(p)
-    override def list(dir: Path, glob: String): Seq[Path] = PosixLogStore.list(dir, glob)
-    override def deleteIfExists(p: Path): Boolean = PosixLogStore.deleteIfExists(p)
-    override def mtimeMs(p: Path): Long = PosixLogStore.mtimeMs(p)
-    override def createDirectories(p: Path): Unit = PosixLogStore.createDirectories(p)
   }
 
   test("non-atomic publish (racing loser overwrites winner) is detected") {
